@@ -32,6 +32,7 @@ preserved without serializing execution.
 
 from __future__ import annotations
 
+import shutil
 import time
 import uuid
 from pathlib import Path
@@ -192,8 +193,6 @@ class Forwarder:
             if full_refresh:
                 dest = Path(self._dest_path(table))
                 if dest.exists():
-                    import shutil
-
                     shutil.rmtree(dest)
             out[table.name] = self._forward(table, lo=None, run_id=run_id)
         return out
@@ -217,7 +216,7 @@ class Forwarder:
         # migbq's range granularity without serializing execution.  The
         # per-range rows never touch the driver: the log is a distributed
         # parquet append, and only MIN/MAX/COUNT scalars come back (one
-        # row) for the progress update.
+        # row) for the progress update, a driver-local JSON file.
         bs = self.cfg.batch_size
         ranges = src.groupBy((pk - 1 - (pk - 1) % bs).alias("range_lo")).agg(
             F.count(F.lit(1)).alias("n_rows"), F.max(pk).alias("max_pk")
@@ -245,12 +244,7 @@ class Forwarder:
         finally:
             ranges.unpersist()
         n_rows = int(totals.n_rows)
-        last_pk = int(totals.last_pk)
-        prev = self.meta.progress().filter(
-            F.col("table_name") == table.name
-        ).collect()
-        prev_rows = int(prev[0].n_rows) if prev else 0
-        self.meta.set_progress(table.name, last_pk, prev_rows + n_rows, run_id)
+        self.meta.set_progress(table.name, int(totals.last_pk), n_rows, run_id)
         return n_rows
 
     def check(self, repair: bool = False) -> dict[str, DataFrame]:
@@ -334,7 +328,5 @@ class Forwarder:
         deduped = dest.dropDuplicates([table.pk])
         tmp = f"{dest_path}.__dedup__{int(time.time() * 1e6)}"
         deduped.write.mode("overwrite").parquet(tmp)
-        import shutil
-
         shutil.rmtree(dest_path)
         Path(tmp).rename(dest_path)

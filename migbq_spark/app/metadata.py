@@ -3,35 +3,36 @@
 The reference keeps per-table progress (last migrated PK, row counts) and
 a per-range job log in sqlite via peewee
 (`[pub:H migbq/MigrationMetadataManager.py]`, SURVEY.md §1.1/§3.1).
-Here the same two relations are small parquet tables under `meta.path`:
+Here the two relations live under `meta.path` in two different forms,
+because they grow at different rates:
 
-    progress(table_name, last_pk, n_rows, updated_run)
-    job_log(table_name, range_lo, range_hi, n_rows, state, run_id)
+    progress.json  {table_name: {last_pk, n_rows, updated_run}}
+    job_log/       parquet (table_name, range_lo, range_hi, n_rows,
+                            state, run_id)
 
-Writes go through an atomic swap (write new → rename) so a killed run
-never leaves a torn state file — the role migbq's sqlite transaction
-played.  State is tiny (O(tables + ranges)): reading it back is a
-metadata-only scan, never a data-scale operation.
+Progress grows with the number of tables, so it is one small JSON
+document read and written on the driver: no Spark job, no Python
+worker.  Every update replaces the whole document (temp file, fsync,
+`os.replace`), so a crash leaves the previous resume point or the new
+one, never a torn or missing one — the role migbq's sqlite transaction
+played.  The store assumes one
+writer per `meta.path`, as migbq's one process per config did.
+
+The job log grows with the number of PK ranges (about 10⁷ rows at
+100 TB), so it stays a distributed parquet append that never passes
+through the driver.
 """
 
 from __future__ import annotations
 
-import shutil
-import time
+import json
+import os
+import tempfile
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-PROGRESS_SCHEMA = T.StructType(
-    [
-        T.StructField("table_name", T.StringType()),
-        T.StructField("last_pk", T.LongType()),
-        T.StructField("n_rows", T.LongType()),
-        T.StructField("updated_run", T.StringType()),
-    ]
-)
 
 JOB_LOG_SCHEMA = T.StructType(
     [
@@ -51,42 +52,50 @@ class MetadataStore:
         self.root = Path(path)
         self.root.mkdir(parents=True, exist_ok=True)
 
-    # ---------------------------------------------------------- internals
-
-    def _read(self, name: str, schema: T.StructType) -> DataFrame:
-        p = self.root / name
-        if not p.exists():
-            return self.spark.createDataFrame([], schema)
-        return self.spark.read.schema(schema).parquet(str(p))
-
-    def _swap_write(self, df: DataFrame, name: str) -> None:
-        tmp = self.root / f"_{name}.tmp.{int(time.time() * 1e6)}"
-        df.coalesce(1).write.mode("overwrite").parquet(str(tmp))
-        final = self.root / name
-        if final.exists():
-            shutil.rmtree(final)
-        tmp.rename(final)
-
     # ------------------------------------------------------------- progress
 
-    def progress(self) -> DataFrame:
-        return self._read("progress", PROGRESS_SCHEMA)
+    def progress(self) -> dict[str, dict]:
+        """The whole progress document: table name → ``{"last_pk",
+        "n_rows", "updated_run"}``; empty before the first forward."""
+        try:
+            return json.loads((self.root / "progress.json").read_text())
+        except FileNotFoundError:
+            return {}
 
     def last_pk(self, table: str) -> int | None:
-        rows = self.progress().filter(F.col("table_name") == table).collect()
-        return rows[0].last_pk if rows else None
+        entry = self.progress().get(table)
+        return entry["last_pk"] if entry else None
 
-    def set_progress(self, table: str, last_pk: int, n_rows: int, run_id: str) -> None:
-        others = self.progress().filter(F.col("table_name") != table)
-        new = self.spark.createDataFrame(
-            [(table, last_pk, n_rows, run_id)], PROGRESS_SCHEMA
+    def set_progress(self, table: str, last_pk: int, n_added: int, run_id: str) -> None:
+        """Record that run ``run_id`` forwarded ``n_added`` more rows of
+        ``table``, up to ``last_pk``; ``n_rows`` is the running total."""
+        doc = self.progress()
+        n_rows = doc.get(table, {}).get("n_rows", 0) + n_added
+        doc[table] = {"last_pk": last_pk, "n_rows": n_rows, "updated_run": run_id}
+        # Publish all or nothing: temp file in the same directory, fsync,
+        # os.replace.  A failure removes the temp file; a killed process
+        # can leave only a hidden `.progress.json.*.tmp`, which no reader
+        # opens.
+        fd, tmp = tempfile.mkstemp(
+            dir=self.root, prefix=".progress.json.", suffix=".tmp"
         )
-        self._swap_write(others.unionByName(new), "progress")
+        try:
+            with os.fdopen(fd, "w") as fh:
+                json.dump(doc, fh, sort_keys=True)
+                fh.flush()
+                os.fsync(fh.fileno())
+            os.replace(tmp, self.root / "progress.json")
+        except BaseException:
+            os.unlink(tmp)
+            raise
 
     # -------------------------------------------------------------- job log
 
     def job_log(self) -> DataFrame:
-        return self._read("job_log", JOB_LOG_SCHEMA)
+        p = self.root / "job_log"
+        if not p.exists():
+            return self.spark.createDataFrame([], JOB_LOG_SCHEMA)
+        return self.spark.read.schema(JOB_LOG_SCHEMA).parquet(str(p))
 
     def append_jobs(self, rows: list[tuple]) -> None:
         self.append_jobs_df(self.spark.createDataFrame(rows, JOB_LOG_SCHEMA))

@@ -44,11 +44,6 @@ from pyspark.sql import functions as F
 from migbq_spark.catalog import load
 from migbq_spark.registry import register
 
-#: Curation-funnel scan strategy (r14): one persisted-token-base corpus
-#: scan (default) vs the r13 three-scan composition, A/B'd at sf10
-#: (SCALING_r14.md).  The env override exists for the A/B harness only.
-_FUNNEL_ONE_SCAN = os.environ.get("MIGBQ_FUNNEL_ONE_SCAN", "1") == "1"
-
 #: Checkpoint/action FUSION (r15, guide §1.2 step 1 / §2.4): at sites
 #: where an eager localCheckpoint is immediately followed by a driver
 #: ACTION over the SAME frame (the CC fixpoint's per-round stats agg),
@@ -2531,7 +2526,7 @@ def corpus_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     stays a row-local CASE over three joined signals, each
     individually scale-shaped (two-star CC, one aggregation, one
     vocab-probe join).  sf10 A/B (r14, min-of-2 warm, fresh sessions):
-    one-scan vs the r13 three-scan form — see SCALING_r14.md.
+    one-scan vs the retired r13 three-scan form — see SCALING_r14.md.
 
     Staging contract (r15): the parquet snapshot goes under
     `MIGBQ_STAGE_DIR` when set (on a cluster: a shared FS / object
@@ -2541,95 +2536,70 @@ def corpus_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     path.  One live funnel frame at a time: each invocation deletes
     the previous snapshot, so re-executing a PREVIOUS invocation's
     returned DataFrame raises rather than silently rescanning."""
-    if _FUNNEL_ONE_SCAN:
-        d = load(spark, sf_dir, "documents")
-        # unpersist the PREVIOUS round's cache BEFORE persisting the new
-        # one: a repeat invocation builds an identical logical plan, so
-        # persist-then-unpersist would register "already cached" and the
-        # unpersist of the old frame would evict the new entry too
-        # (measured r14: the second invocation ran with 3 file scans and
-        # zero InMemoryTableScans — the plan contract now pins this)
-        global _FUNNEL_CACHE, _FUNNEL_STAGE_DIR
-        if _FUNNEL_CACHE is not None:
-            _FUNNEL_CACHE.unpersist()
-            _FUNNEL_CACHE = None
-        if _FUNNEL_STAGE_DIR is not None:
-            shutil.rmtree(_FUNNEL_STAGE_DIR, ignore_errors=True)
-            _FUNNEL_STAGE_DIR = None
-        stage_root = (
-            _funnel_stage_root(spark)
-            if os.environ.get("MIGBQ_FUNNEL_STAGE", "parquet") == "parquet"
-            else None
-        )
-        if stage_root is not None:
-            # COLUMNAR token-base staging (r14 opt round, guide §6): the
-            # DISK_ONLY cache serialized fact-scale rows through the
-            # generic block serializer; a parquet snapshot compresses the
-            # token arrays columnar and re-reads them with a vectorized
-            # scan.  sf10 A/B (min-of-2 x 2 interleaved rounds, e2e
-            # build+noop): run-1 78.4 -> 70.8 s (-10%), steady state
-            # flat (68-69 s both arms).  The snapshot lives in a fresh
-            # per-invocation dir under `_funnel_stage_root` (deleted on
-            # the NEXT invocation — so a DataFrame returned by the
-            # PREVIOUS invocation becomes unreadable once a new one runs:
-            # ONE live funnel frame at a time — plus an atexit reap of
-            # the final dir) so nothing persists across bench/oracle
-            # runs.  On non-local masters without MIGBQ_STAGE_DIR this
-            # branch is skipped for the cluster-safe DISK_ONLY persist
-            # (r14 ADVICE: a driver-local temp path is not a shared FS).
-            dest = tempfile.mkdtemp(
-                prefix="migbq_funnel_tok_", dir=stage_root
-            )
-            _FUNNEL_STAGE_DIR = dest
-            d.select(
-                "doc_id",
-                "source",
-                F.filter(F.split("text", " "), lambda t: t != "").alias("t"),
-            ).write.mode("overwrite").parquet(dest + "/t")
-            arr = spark.read.parquet(dest + "/t")
-        else:
-            arr = d.select(
-                "doc_id",
-                "source",
-                F.filter(F.split("text", " "), lambda t: t != "").alias("t"),
-            ).persist(StorageLevel.DISK_ONLY)
-            _FUNNEL_CACHE = arr
-        comps = _cross_source_cc(
-            _portable_band_df(
-                spark,
-                sf_dir,
-                mins=_portable_minhash_df(
-                    spark, sf_dir, toks=_tok_df(spark, sf_dir, arr=arr)
-                ),
-            )
-        )
-        n_tokens = F.size(F.array_distinct("t")).cast("bigint")
-        n_all = F.size("t").cast("bigint")
-        ttr = n_tokens * F.lit(1.0) / n_all
-        q = arr.where(n_all > 0).select(
-            "doc_id",
-            "source",
-            n_tokens.alias("n_tokens"),
-            (
-                F.lit(0.5) * ttr
-                + F.lit(0.5) * F.least(n_all / F.lit(50.0), F.lit(1.0))
-            ).alias("quality"),
-        )
-        leak_src = _decontam_from_arr(arr.select("doc_id", "t"))
-        return _funnel_report(comps, q, leak_src)
-    comps = dedup_cross_source_cc(spark, sf_dir)
     d = load(spark, sf_dir, "documents")
-    toks = F.filter(F.split("text", " "), lambda t: t != "")
-    n_tokens = F.size(F.array_distinct(toks)).cast("bigint")
+    # unpersist the PREVIOUS round's cache BEFORE persisting the new
+    # one: a repeat invocation builds an identical logical plan, so
+    # persist-then-unpersist would register "already cached" and the
+    # unpersist of the old frame would evict the new entry too
+    # (measured r14: the second invocation ran with 3 file scans and
+    # zero InMemoryTableScans — the plan contract now pins this)
+    global _FUNNEL_CACHE, _FUNNEL_STAGE_DIR
+    if _FUNNEL_CACHE is not None:
+        _FUNNEL_CACHE.unpersist()
+        _FUNNEL_CACHE = None
+    if _FUNNEL_STAGE_DIR is not None:
+        shutil.rmtree(_FUNNEL_STAGE_DIR, ignore_errors=True)
+        _FUNNEL_STAGE_DIR = None
+    base = d.select(
+        "doc_id",
+        "source",
+        F.filter(F.split("text", " "), lambda t: t != "").alias("t"),
+    )
+    stage_root = _funnel_stage_root(spark)
+    if stage_root is not None:
+        # COLUMNAR token-base staging (r14 opt round, guide §6): the
+        # DISK_ONLY cache serialized fact-scale rows through the
+        # generic block serializer; a parquet snapshot compresses the
+        # token arrays columnar and re-reads them with a vectorized
+        # scan.  sf10 A/B (min-of-2 x 2 interleaved rounds, e2e
+        # build+noop): run-1 78.4 -> 70.8 s (-10%), steady state
+        # flat (68-69 s both arms).  The snapshot lives in a fresh
+        # per-invocation dir under `_funnel_stage_root` (deleted on
+        # the NEXT invocation — so a DataFrame returned by the
+        # PREVIOUS invocation becomes unreadable once a new one runs:
+        # ONE live funnel frame at a time — plus an atexit reap of
+        # the final dir) so nothing persists across bench/oracle
+        # runs.  On non-local masters without MIGBQ_STAGE_DIR this
+        # branch is skipped for the cluster-safe DISK_ONLY persist
+        # (r14 ADVICE: a driver-local temp path is not a shared FS).
+        dest = tempfile.mkdtemp(
+            prefix="migbq_funnel_tok_", dir=stage_root
+        )
+        _FUNNEL_STAGE_DIR = dest
+        base.write.mode("overwrite").parquet(dest + "/t")
+        arr = spark.read.parquet(dest + "/t")
+    else:
+        arr = base.persist(StorageLevel.DISK_ONLY)
+        _FUNNEL_CACHE = arr
+    comps = _cross_source_cc(
+        _portable_band_df(
+            spark,
+            sf_dir,
+            mins=_portable_minhash_df(
+                spark, sf_dir, toks=_tok_df(spark, sf_dir, arr=arr)
+            ),
+        )
+    )
     # NOTE: quality uses ALL-token counts; n_tokens output is DISTINCT
     # tokens (matches the oracle's tok CTE, which is DISTINCT)
-    n_all = F.size(toks).cast("bigint")
+    n_tokens = F.size(F.array_distinct("t")).cast("bigint")
+    n_all = F.size("t").cast("bigint")
     ttr = n_tokens * F.lit(1.0) / n_all
     # where(n_all > 0) mirrors the oracle's INNER join against its q
     # CTE: zero-token docs have no quality row there and would otherwise
     # carry quality = 0/0 = NULL here, making every fate-CASE branch
     # NULL-false and mis-filing the doc as 'kept'.
-    q = d.where(n_all > 0).select(
+    q = arr.where(n_all > 0).select(
         "doc_id",
         "source",
         n_tokens.alias("n_tokens"),
@@ -2638,7 +2608,7 @@ def corpus_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
             + F.lit(0.5) * F.least(n_all / F.lit(50.0), F.lit(1.0))
         ).alias("quality"),
     )
-    leak_src = decontaminate_train_drop(spark, sf_dir)
+    leak_src = _decontam_from_arr(arr.select("doc_id", "t"))
     return _funnel_report(comps, q, leak_src)
 
 

@@ -473,6 +473,7 @@ class LoadJobWriter(DataSourceWriter):
         import json
         import os
         import shutil
+        import tempfile
 
         staging = os.path.join(self.dest, "_staging")
         files = []
@@ -492,8 +493,23 @@ class LoadJobWriter(DataSourceWriter):
             "n_rows": sum(f["rows"] for f in files),
             "files": sorted(files, key=lambda f: f["file"]),
         }
-        with open(os.path.join(self.dest, "_MANIFEST.json"), "w") as fh:
-            json.dump(manifest, fh, sort_keys=True)
+        # Publish the manifest all or nothing (temp file, fsync,
+        # os.replace) so a crash never leaves a torn receipt.  Inline,
+        # not a package helper: this module ships by value to Python
+        # runners that may not be able to import the package.  The temp
+        # name starts with a dot, which Spark's file listing skips.
+        fd, tmp = tempfile.mkstemp(
+            dir=self.dest, prefix="._MANIFEST.json.", suffix=".tmp"
+        )
+        try:
+            with os.fdopen(fd, "w") as fh:
+                json.dump(manifest, fh, sort_keys=True)
+                fh.flush()
+                os.fsync(fh.fileno())
+            os.replace(tmp, os.path.join(self.dest, "_MANIFEST.json"))
+        except BaseException:
+            os.unlink(tmp)
+            raise
 
     def abort(self, messages):
         import os

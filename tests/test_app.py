@@ -2,19 +2,19 @@
 (run / sync / check lifecycle, SURVEY.md §3.1 EP1-EP3)."""
 
 import json
+import os
 
 import pytest
 from pyspark.sql import functions as F
 
 
-@pytest.fixture()
-def cfg_path(tmp_path, sf_dir):
+def _write_cfg(tmp_path, in_path: str) -> str:
     import yaml
 
     cfg = {
         "in": {
             "type": "parquet",
-            "path": sf_dir,
+            "path": in_path,
             "tables": {"events": {"pk": "event_id"}, "nation": {"pk": "n_nationkey"}},
             "batch_size": 1000,
         },
@@ -24,6 +24,32 @@ def cfg_path(tmp_path, sf_dir):
     p = tmp_path / "config.yml"
     p.write_text(yaml.safe_dump(cfg))
     return str(p)
+
+
+@pytest.fixture()
+def cfg_path(tmp_path, sf_dir):
+    return _write_cfg(tmp_path, sf_dir)
+
+
+@pytest.fixture()
+def delta_cfg(spark, tmp_path, sf_dir):
+    """A config over a writable copy of the source: nation whole, events
+    without its top 20 % of PKs.  The returned ``add_delta()`` appends
+    those rows to the source and returns how many it added."""
+    src = tmp_path / "src"
+    spark.read.parquet(f"{sf_dir}/nation.parquet").write.parquet(
+        str(src / "nation.parquet")
+    )
+    events = spark.read.parquet(f"{sf_dir}/events.parquet")
+    cut = events.agg(F.percentile_approx("event_id", 0.8)).collect()[0][0]
+    events.filter(F.col("event_id") < cut).write.parquet(str(src / "events.parquet"))
+
+    def add_delta() -> int:
+        delta = events.filter(F.col("event_id") >= cut)
+        delta.write.mode("append").parquet(str(src / "events.parquet"))
+        return delta.count()
+
+    return _write_cfg(tmp_path, str(src)), add_delta
 
 
 def _forwarder(spark, cfg_path):
@@ -53,14 +79,60 @@ def test_run_full_load(spark, cfg_path, sf_dir):
     assert log.agg(F.sum("n_rows")).collect()[0][0] == n_src
 
 
-def test_sync_is_incremental(spark, cfg_path):
+def test_sync_is_incremental(spark, delta_cfg):
+    cfg_path, add_delta = delta_cfg
     fwd = _forwarder(spark, cfg_path)
-    fwd.run()
+    n_run = fwd.run()["events"]
     # nothing new → sync forwards zero rows, destination unchanged
     before = fwd.read_dest(fwd.cfg.tables[0]).count()
     counts = fwd.sync()
     assert counts == {"events": 0, "nation": 0}
     assert fwd.read_dest(fwd.cfg.tables[0]).count() == before
+
+    # new rows past the high-water mark → sync forwards exactly those,
+    # and the progress row count accumulates across run + sync
+    n_delta = add_delta()
+    assert fwd.sync() == {"events": n_delta, "nation": 0}
+    assert fwd.read_dest(fwd.cfg.tables[0]).count() == before + n_delta
+    events = fwd.read_source(fwd.cfg.tables[0])
+    progress = fwd.meta.progress()["events"]
+    assert progress["n_rows"] == n_run + n_delta == events.count()
+    assert progress["last_pk"] == events.agg(F.max("event_id")).collect()[0][0]
+
+
+def test_sync_crash_before_progress_publish(spark, delta_cfg, monkeypatch):
+    """A sync killed after its destination append but before the progress
+    publish keeps the previous resume point; the next sync re-forwards
+    the delta and repair removes the resulting duplicates."""
+    cfg_path, add_delta = delta_cfg
+    fwd = _forwarder(spark, cfg_path)
+    n_run = fwd.run()["events"]
+    prev_pk = fwd.meta.last_pk("events")
+    n_delta = add_delta()
+
+    def crash(src, dst):
+        raise OSError("simulated crash before publish")
+
+    monkeypatch.setattr(os, "replace", crash)
+    with pytest.raises(OSError, match="simulated crash"):
+        fwd.sync()
+    monkeypatch.undo()
+
+    events = fwd.cfg.tables[0]
+    # the delta reached the destination; only the resume point is stale
+    assert fwd.read_dest(events).count() == n_run + n_delta
+    assert fwd.meta.last_pk("events") == prev_pk
+    assert sorted(p.name for p in fwd.meta.root.iterdir()) == [
+        "job_log",
+        "progress.json",
+    ]
+
+    assert fwd.sync() == {"events": n_delta, "nation": 0}
+    fwd.check(repair=True)
+    n_src = fwd.read_source(events).count()
+    dest = fwd.read_dest(events)
+    assert dest.count() == n_src
+    assert dest.select("event_id").distinct().count() == n_src
 
 
 def test_check_clean_and_repair(spark, cfg_path, tmp_path):
@@ -74,8 +146,9 @@ def test_check_clean_and_repair(spark, cfg_path, tmp_path):
     events = fwd.cfg.tables[0]
     dup = fwd.read_source(events).filter("event_id <= 500")
     dup.write.mode("append").parquet(fwd._dest_path(events))
-    rep = fwd.check()["events"]
     # distinct-pk counting means counts still reconcile, but repair dedups
+    rep = fwd.check()["events"]
+    assert rep.filter("mismatch").count() == 0
     fwd.check(repair=True)
     n_src = fwd.read_source(events).count()
     dest = fwd.read_dest(events)

@@ -724,6 +724,7 @@ def test_loadjob_sink_commit_protocol(spark, tmp_path):
     assert man["n_rows"] == 100
     assert man["n_files"] == len(list(Path(ok_dest).glob("part-*.jsonl.gz")))
     assert not (Path(ok_dest) / "_staging").exists()
+    assert not list(Path(ok_dest).glob(".*"))  # no manifest temp file left
 
     bad_dest = str(tmp_path / "bad")
     bad = df.select(
