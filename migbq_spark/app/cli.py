@@ -16,6 +16,8 @@ import argparse
 import json
 import sys
 
+from pyspark.sql import functions as F
+
 from migbq_spark.app.config import PipelineConfig
 from migbq_spark.app.forwarder import Forwarder
 from migbq_spark.session import get_spark
@@ -46,12 +48,14 @@ def main(argv: list[str] | None = None) -> int:
         result = {"sync": fwd.sync()}
     else:
         reports = fwd.check(repair=args.repair)
+        # one aggregation per table: each action re-runs the whole
+        # source/destination reconciliation
         result = {
             "check": {
-                t: {
-                    "ranges": rep.count(),
-                    "mismatched": rep.filter("mismatch").count(),
-                }
+                t: rep.agg(
+                    F.count(F.lit(1)).alias("ranges"),
+                    F.count_if("mismatch").alias("mismatched"),
+                ).collect()[0].asDict()
                 for t, rep in reports.items()
             }
         }

@@ -6,9 +6,10 @@ The reference's hand-rolled serial loop
     for lo in range(min_pk, max_pk, batch_size):
         SELECT * WHERE pk > lo AND pk <= lo+batch_size  → gzip → BQ load job
 
-collapses into ONE declarative pipeline per table (SURVEY §3.2): a
-partitioned read whose partitions ARE the PK ranges (JDBC stride or
-parquet row groups), a single distributed sink write, and a metadata
+reads each PK range of the source once.  Here it collapses into ONE
+declarative pipeline per table (SURVEY §3.2) that also reads the source
+once: a partitioned read whose partitions ARE the PK ranges (JDBC stride
+or parquet row groups), a single distributed sink write, and a metadata
 update — Spark's scheduler supplies the parallelism, retry, and
 speculative re-execution migbq implemented by hand around its loop.
 
@@ -22,22 +23,44 @@ Commands (mirroring `migbq run|sync|check config.yml`):
            keep-latest-per-PK (§2 `win_rownum_dedup` — migbq's BQ dedup
            DML).
 
+One forward (`Forwarder._forward`), in order:
+1. probe MIN/MAX of the delta only (`pk > last_pk`), so the JDBC stride
+   partitions are sized to the delta, not to the whole table;
+2. write the delta once into `<dest>/_stage-<run_id>/`, with its row
+   count and largest PK observed on that same write (`df.observe`) —
+   no separate totals pass, no second source scan.  Readers never see
+   staged rows: Spark's file index skips `_`-prefixed names and a
+   `<dest>/*.parquet` glob does not descend into subdirectories;
+3. publish: `os.rename` each staged part file into `<dest>` (an empty
+   delta is discarded instead);
+4. append the per-range job log from a pk-only read of exactly the
+   files just published (the destination, not the source);
+5. record progress with the observed totals.
+
+Crash semantics: a command killed before step 3 leaves only a
+`_stage-*` directory, which the next forward of that table deletes, and
+the old resume point, so the next sync forwards the delta exactly once.
+A crash during or after step 3 but before step 5 leaves published rows
+with the old resume point; the next sync forwards them again and
+`check --repair` drops the duplicate PKs.
+
 Scale notes (100 TB): per-table work is a scan + an append — no driver
-funnel; JDBC ingestion parallelism = ceil(pk_span / batch_size) stride
-partitions (capped), exactly migbq's batch size semantics run N-wide.
-The job log records the *planned* stride ranges with their actual row
-counts (computed distributed, one groupBy), so check/retry semantics are
-preserved without serializing execution.
+funnel; JDBC ingestion parallelism = ceil(delta_span / batch_size)
+stride partitions (capped), exactly migbq's batch size semantics run
+N-wide.  Only the observed scalars and the published file names reach
+the driver.
 """
 
 from __future__ import annotations
 
+import contextlib
+import os
 import shutil
 import time
 import uuid
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from migbq_spark.app.config import PipelineConfig, TableSpec
@@ -83,18 +106,19 @@ class Forwarder:
         if self.cfg.in_type == "parquet":
             df = self.spark.read.parquet(f"{self.cfg.in_path}/{table.name}.parquet")
         elif self.cfg.in_type == "jdbc":
-            df = self._read_jdbc(table)
+            df = self._read_jdbc(table, lo)
         else:
             raise ValueError(f"unknown in.type {self.cfg.in_type!r}")
         if lo is not None:
             df = df.filter(F.col(table.pk) > lo)  # pushed to scan/JDBC
         return df
 
-    def _read_jdbc(self, table: TableSpec) -> DataFrame:
+    def _read_jdbc(self, table: TableSpec, lo: int | None) -> DataFrame:
         """Partitioned JDBC read: Spark emits one stride query per
         partition — migbq's PK-range sweep, parallelized.  Bounds come
         from a one-row min/max probe (migbq's first query, §2
-        `agg_pk_bounds`)."""
+        `agg_pk_bounds`) over ``pk > lo`` only, so a sync's partitions
+        span its delta, not the whole table."""
         def reader():
             # fresh reader per use: DataFrameReader options accumulate,
             # and 'query' (probe) conflicts with 'dbtable' (range read)
@@ -124,12 +148,14 @@ class Forwarder:
             (f'"{table.pk}"', f'"{table.name}"'),
             (table.pk, f'"{table.name}"'),
         ):
+            # int(): lo comes from the on-disk progress file
+            where = "" if lo is None else f" WHERE {pk_q} > {int(lo)}"
             try:
                 bounds = (
                     reader().option(
                         "query",
                         f"SELECT MIN({pk_q}) AS lo, MAX({pk_q}) AS hi "
-                        f"FROM {tbl_q}",
+                        f"FROM {tbl_q}{where}",
                     )
                     .load()
                     .collect()[0]
@@ -208,43 +234,55 @@ class Forwarder:
         return out
 
     def _forward(self, table: TableSpec, lo: int | None, run_id: str) -> int:
+        """Forward rows with ``pk > lo`` (all rows when None) with one
+        source scan, in the order and with the crash semantics the
+        module docstring gives; returns the rows forwarded."""
+        dest = Path(self._dest_path(table))
+        # staging left by a command killed before its publish
+        for orphan in dest.glob("_stage-*"):
+            shutil.rmtree(orphan)
         src = self.read_source(table, lo=lo)
         pk = F.col(table.pk)
 
-        # Plan the migbq-style ranges and their row counts in ONE
-        # distributed pass (groupBy on pk div batch_size) — the log keeps
-        # migbq's range granularity without serializing execution.  The
-        # per-range rows never touch the driver: the log is a distributed
-        # parquet append, and only MIN/MAX/COUNT scalars come back (one
-        # row) for the progress update, a driver-local JSON file.
-        bs = self.cfg.batch_size
-        ranges = src.groupBy((pk - 1 - (pk - 1) % bs).alias("range_lo")).agg(
-            F.count(F.lit(1)).alias("n_rows"), F.max(pk).alias("max_pk")
-        )
-        ranges.persist()
+        # One source scan: the totals ride the staging write itself.
+        obs = Observation()
+        stage = dest / f"_stage-{run_id}"
+        published: list[str] = []
         try:
-            totals = ranges.agg(
-                F.sum("n_rows").alias("n_rows"), F.max("max_pk").alias("last_pk")
-            ).collect()[0]
-            if totals.n_rows is None:
-                return 0
-
-            src.write.mode("append").parquet(self._dest_path(table))
-
-            self.meta.append_jobs_df(
-                ranges.select(
-                    F.lit(table.name).alias("table_name"),
-                    F.col("range_lo"),
-                    (F.col("range_lo") + bs).alias("range_hi"),
-                    F.col("n_rows"),
-                    F.lit("done").alias("state"),
-                    F.lit(run_id).alias("run_id"),
-                )
-            )
+            src.observe(
+                obs, F.count(F.lit(1)).alias("n_rows"), F.max(pk).alias("last_pk")
+            ).write.parquet(str(stage))
+            n_rows = int(obs.get["n_rows"])
+            if n_rows:
+                for part in sorted(stage.glob("part-*.parquet")):
+                    os.rename(part, dest / part.name)
+                    published.append(str(dest / part.name))
         finally:
-            ranges.unpersist()
-        n_rows = int(totals.n_rows)
-        self.meta.set_progress(table.name, int(totals.last_pk), n_rows, run_id)
+            shutil.rmtree(stage, ignore_errors=True)
+            # an empty first forward must not leave an empty, unreadable dest
+            with contextlib.suppress(OSError):
+                dest.rmdir()
+        if not n_rows:
+            return 0
+
+        # Job log at migbq's range granularity, counted from the files
+        # just published: a pk-only parquet read, not a second source scan.
+        bs = self.cfg.batch_size
+        self.meta.append_jobs_df(
+            self.spark.read.schema(src.select(pk).schema)
+            .parquet(*published)
+            .groupBy((pk - 1 - (pk - 1) % bs).alias("range_lo"))
+            .agg(F.count(F.lit(1)).alias("n_rows"))
+            .select(
+                F.lit(table.name).alias("table_name"),
+                F.col("range_lo"),
+                (F.col("range_lo") + bs).alias("range_hi"),
+                F.col("n_rows"),
+                F.lit("done").alias("state"),
+                F.lit(run_id).alias("run_id"),
+            )
+        )
+        self.meta.set_progress(table.name, int(obs.get["last_pk"]), n_rows, run_id)
         return n_rows
 
     def check(self, repair: bool = False) -> dict[str, DataFrame]:

@@ -3,6 +3,7 @@
 
 import json
 import os
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
@@ -133,6 +134,110 @@ def test_sync_crash_before_progress_publish(spark, delta_cfg, monkeypatch):
     dest = fwd.read_dest(events)
     assert dest.count() == n_src
     assert dest.select("event_id").distinct().count() == n_src
+
+
+def test_sync_crash_during_staged_publish(spark, delta_cfg, monkeypatch):
+    """A sync whose publish (the rename of staged part files into the
+    destination) fails leaves the destination, the resume point and no
+    staging behind; the next sync forwards the delta exactly once, with
+    no repair."""
+    cfg_path, add_delta = delta_cfg
+    fwd = _forwarder(spark, cfg_path)
+    n_run = fwd.run()["events"]
+    prev_pk = fwd.meta.last_pk("events")
+    n_delta = add_delta()
+
+    def crash(src, dst):
+        raise OSError("simulated crash during publish")
+
+    monkeypatch.setattr(os, "rename", crash)
+    with pytest.raises(OSError, match="simulated crash"):
+        fwd.sync()
+    monkeypatch.undo()
+
+    events = fwd.cfg.tables[0]
+    dest_dir = Path(fwd._dest_path(events))
+    assert fwd.read_dest(events).count() == n_run
+    assert fwd.meta.last_pk("events") == prev_pk
+    assert not list(dest_dir.glob("_stage-*"))
+
+    assert fwd.sync() == {"events": n_delta, "nation": 0}
+    dest = fwd.read_dest(events)
+    assert dest.count() == n_run + n_delta
+    assert dest.select("event_id").distinct().count() == n_run + n_delta
+
+
+def test_sync_sweeps_orphan_staging(spark, cfg_path):
+    """Staging left by a command killed before its publish holds rows
+    that were never recorded as forwarded; the next forward deletes it."""
+    fwd = _forwarder(spark, cfg_path)
+    fwd.run()
+    events = fwd.cfg.tables[0]
+    dest_dir = Path(fwd._dest_path(events))
+    orphan = dest_dir / "_stage-x"
+    orphan.mkdir()
+    dup = fwd.read_source(events).filter("event_id <= 500").toPandas()
+    dup.to_parquet(orphan / "part-0.parquet", index=False)
+
+    assert fwd.sync() == {"events": 0, "nation": 0}
+    assert not orphan.exists()
+    dest = fwd.read_dest(events)
+    assert dest.count() == dest.select("event_id").distinct().count()
+
+
+def test_sync_jdbc_probe_spans_delta(spark, tmp_path, sf_dir):
+    """A sync's MIN/MAX probe covers only ``pk > last_pk``, so the stride
+    partitions are sized to the delta: 5 new PKs at batch_size 10 are one
+    partition, not the 12 a whole-table span (PKs 0–124) would plan."""
+    from migbq_spark.app import Forwarder, PipelineConfig
+
+    url = f"jdbc:derby:memory:probe_{tmp_path.name};create=true"
+    driver = "org.apache.derby.jdbc.EmbeddedDriver"
+    nation = spark.read.parquet(f"{sf_dir}/nation.parquet")
+
+    def derby_write(df, mode):
+        (
+            df.write.format("jdbc")
+            .option("url", url)
+            .option("dbtable", "nation")
+            .option("driver", driver)
+            .mode(mode)
+            .save()
+        )
+
+    derby_write(nation, "overwrite")
+    fwd = Forwarder(
+        spark,
+        PipelineConfig.from_dict(
+            {
+                "in": {
+                    "type": "jdbc",
+                    "url": url,
+                    "driver": driver,
+                    "tables": {"nation": {"pk": "n_nationkey"}},
+                    "batch_size": 10,
+                },
+                "out": {"type": "parquet", "path": str(tmp_path / "dest")},
+                "meta": {"path": str(tmp_path / "meta")},
+            }
+        ),
+    )
+    n_src = fwd.run()["nation"]
+    derby_write(
+        nation.filter("n_nationkey < 5").withColumn(
+            "n_nationkey", F.col("n_nationkey") + 120
+        ),
+        "append",
+    )
+
+    table = fwd.cfg.tables[0]
+    delta = fwd.read_source(table, lo=fwd.meta.last_pk("nation"))
+    assert delta.rdd.getNumPartitions() == 1
+    assert fwd.sync() == {"nation": 5}
+    pks = [r[0] for r in fwd.read_dest(table).select("n_nationkey").collect()]
+    assert len(pks) == len(set(pks)) == n_src + 5
+    assert sorted(pks)[-5:] == [120, 121, 122, 123, 124]
+    assert fwd.meta.last_pk("nation") == 124
 
 
 def test_check_clean_and_repair(spark, cfg_path, tmp_path):
